@@ -143,7 +143,12 @@ object Bench {
     val observed = new ObservedMetrics
     spark.listenerManager.register(observed)
 
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // A rep that throws is timed as -1 and fails its query: the query
+    // stays in every map, its message goes to stderr, and the run exits
+    // non-zero once target/bench.json is written — a query that starts
+    // failing must never pass for a faster suite.
+    def once(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       // toRdd.count(), not Dataset.count(): wrapping the query in a count
       // aggregate lets EliminateSorts drop the final ORDER BY, which would
@@ -155,7 +160,10 @@ object Bench {
         observed.harvestFrom(df)
         dt
       }
-      catch { case _: Throwable => -1.0 }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        -1.0
+      }
     }
 
     // min-of-3: this host shows intermittent multi-second stalls
@@ -185,7 +193,7 @@ object Bench {
           .foreach(t => spark.catalog.dropTempView(t.name))
         spark.streams.resetTerminated()
       }
-      val runs = Seq.fill(3) { val t = once(fn); cleanup(); t }
+      val runs = Seq.fill(3) { val t = once(name, fn); cleanup(); t }
       val best = if (runs.exists(_ < 0)) -1.0 else runs.min
       (name, best, runs)
     }
@@ -195,6 +203,9 @@ object Bench {
       "\"" + k + "\":" + runs.map(r => f"$r%.3f").mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
+    val failed = results.collect { case (k, v, _) if v < 0 => k }
+    def names(ks: Seq[String]): String =
+      ks.map("\"" + _ + "\"").mkString("[", ",", "]")
     // map the memory-sink name prefixes back to library query names
     // one definition, shared with the streaming plan census
     val sinkToQuery = graft.streaming.EventStreams.sinkToQuery
@@ -217,15 +228,16 @@ object Bench {
     // contention; unexpected misses ⇒ the shared table stopped carrying
     // its family and every consumer is re-mining.
     val memoJson = graft.MemoStats.json()
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$repsJson,"state":$state,"observed":$obsJson,"memo":$memoJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","n_failed":${failed.size},"failed":${names(failed)},"queries":$qs,"reps":$repsJson,"state":$state,"observed":$obsJson,"memo":$memoJson,"sf":"$sfDir"}"""
     // The driver captures only the last ~2,000 chars of stdout, and the
     // sbt runner appends its own "[success] Total time: …" epilogue
     // AFTER this program's last print — r5-r8's ~1,900-char compact line
     // left no headroom, so it reached the driver truncated mid-JSON and
     // BENCH_r{5..8}.json all carry "parsed": null. The stdout artifact
-    // is therefore a SHORT self-contained line (total + the 10 slowest
-    // queries, ≲ 700 chars — over 1,300 chars of epilogue headroom);
-    // the complete per-query map (all queries, 3-rep arrays, state,
+    // is therefore a SHORT self-contained line (total, the failure count
+    // with at most 10 failed names, and the 10 slowest queries, ≲ 1,000
+    // chars — about 1,000 chars of epilogue headroom); the complete
+    // per-query map (all queries, all failed names, 3-rep arrays, state,
     // observed) lives exclusively in target/bench.json.
     val out = java.nio.file.Paths.get("target/bench.json")
     java.nio.file.Files.createDirectories(out.getParent)
@@ -234,7 +246,8 @@ object Bench {
     val top10 = results.sortBy(-_._2).take(10)
       .map { case (k, v, _) => "\"" + k + "\":" + f"$v%.2f" }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$totalStr,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"queries":$top10,"full":"target/bench.json"}""")
+    println(s"""{"metric":"total","value":$totalStr,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"n_failed":${failed.size},"failed":${names(failed.take(10))},"queries":$top10,"full":"target/bench.json"}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -62,9 +62,7 @@ object Similarity {
     * total — bounded, vs n² for any FIXED k as n grows (the r7 flag:
     * k hard-wired to 8 means 100 TB cells of ~10⁹ vectors each).
     * Exact integer sqrt (no floor(sqrt(double)) drift at perfect
-    * squares); the oracle replays it as MAX(b) WHERE b*b <= COUNT(*).
-    * Production override: `spark.graft.semantic.cells` (set it to
-    * n/targetCellSize when a specific cell population is wanted). */
+    * squares); the oracle replays it as MAX(b) WHERE b*b <= COUNT(*). */
   private[graft] def ivfCells(n: Long): Int = {
     var b = math.max(0L, math.sqrt(n.toDouble).toLong - 2)
     while ((b + 1) * (b + 1) <= n) b += 1
@@ -133,7 +131,7 @@ object Similarity {
 
   /** Retrain trigger for the ANN index-drift monitors, in the 1e9-
     * quantized PSI domain (1e7 ≡ PSI 0.01). A MEASURED operating
-    * point, not a convention: ScaleProbe's drift_recall probe (SCALE.md
+    * point, not a convention: the drift_recall measurement (SCALE.md
     * §24) found recall@5 over the incrementally-maintained index
     * bottoms out (0.91) at PSI ≈ 0.014 — 18× below the textbook 0.25
     * banding rule — and is NON-monotone in drift, so the trigger sits
@@ -238,8 +236,7 @@ object Similarity {
     import s.implicits._
     val e = embWithNorms(s, d)
     val n = e.count()
-    val k = s.conf.getOption("spark.graft.semantic.cells")
-      .map(_.toInt).getOrElse(ivfCells(n))
+    val k = ivfCells(n)
     // Seeds are STRIDE-SPREAD (every ⌊n/k⌋-th id), not consecutive:
     // consecutive ids sample one narrow slice of the corpus — on any
     // corpus with locality in its id order (duplicates land adjacent,
@@ -359,11 +356,10 @@ object Similarity {
     val (incKey, _, _, _) = incIndexCoords(s, d)
     val e = embWithNorms(s, d)
     val n = e.count()
-    // honor spark.graft.semantic.cells exactly like ivfAssigned does
-    // (ADVICE r14): same k ⇒ same full-build memo key ⇒ a session that
-    // already paid the q_sim_ann_retrain build reuses it here
-    val k = s.conf.getOption("spark.graft.semantic.cells")
-      .map(_.toInt).getOrElse(ivfCells(n))
+    // the same k as ivfAssigned (ADVICE r14): same k ⇒ same full-build
+    // memo key ⇒ a session that already paid the q_sim_ann_retrain
+    // build reuses it here
+    val k = ivfCells(n)
     val retrained = graft.MemoStats.memoized("ivf_centroids", centMemo,
       (org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s), d,
         s"full$k"))(lloyd(s, e, k, math.max(1L, n / k)))
@@ -798,9 +794,9 @@ object Similarity {
     // parameterized k-means replays coexisting under disjoint CTE
     // prefixes ([[ivfCtesPrefixed]]). What the action BUYS — recall@5
     // recovering at the drift points where the stale index bottoms
-    // out — is measured in ScaleProbe's drift_recall section, which
-    // executes this exact retrain+re-assign at every planted shift
-    // (SCALE.md §24/§28).
+    // out — is measured in SCALE.md §24/§28's drift_recall section,
+    // which executes this exact retrain+re-assign at every planted
+    // shift.
     "q_sim_ann_retrain" -> ((s, d) => {
       val (stored, delta, _, _, _) = annIncrementalParts(s, d)
       val old = stored.unionAll(delta)

@@ -175,16 +175,13 @@ object UnigramLm {
          |  acc -> substring(acc.seg, 2))""".stripMargin).as("seg"))
   }
 
-  /** Trainer result + instrumentation: the final vocabulary (bounded at
-    * ≤ [[SeedK]] + alphabet rows), the skipped over-long-word counts
-    * (distinct types / weighted tokens), per-phase walls (seed stage vs
-    * EM rounds — the two costs that scale differently with |vocab|),
-    * and the largest per-round usage map (= the driver traffic bound,
-    * ≤ alphabet + SeedK rows by construction). The phase walls feed
-    * ScaleProbe's vocab-growth section (SCALE.md §22). */
+  /** Trainer result: the final vocabulary (bounded at ≤ [[SeedK]] +
+    * alphabet rows) and the skipped over-long-word counts (distinct
+    * types / weighted tokens). Each EM round's usage map is the driver
+    * traffic bound, ≤ alphabet + SeedK rows by construction; SCALE.md
+    * §22 measures both training phases against a growing vocabulary. */
   private[graft] case class TrainStats(vocab: Seq[(String, Long)],
-      skippedTypes: Long, skippedTokens: Long,
-      seedWallS: Double, emWallS: Double, usageRowsMax: Long)
+      skippedTypes: Long, skippedTokens: Long)
 
   /** Memoized [[TrainStats]] per (session UUID, dataset). */
   private val memo = new scala.collection.concurrent.TrieMap[
@@ -217,7 +214,6 @@ object UnigramLm {
         s"unigram trainer: every word exceeds MaxWordLen=$MaxWordLen — " +
           "nothing to train on")
       val words = all.where(length(col("w")) <= MaxWordLen)
-      val t0 = System.nanoTime()
       // alphabet with weighted char frequencies — ≤ alphabet rows
       val chars = words
         .select(col("n"), explode(split(col("w"), "")).as("p"))
@@ -237,10 +233,7 @@ object UnigramLm {
         .where(col("freq") >= 2)
         .orderBy(col("freq").desc, col("p")).limit(SeedK)
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      val seedWall = (System.nanoTime() - t0) / 1e9
       var vocab: Seq[(String, Long)] = chars ++ seedMulti
-      var usageMax = 0L
-      val t1 = System.nanoTime()
       for (_ <- 1 to Rounds) {
         // E: segment; M: piece usage (≤ |vocab| rows to the driver),
         // chars floored at 1, zero-usage multi pieces pruned
@@ -249,13 +242,11 @@ object UnigramLm {
             explode(split(expr("substring(best, 10)"), "~")).as("p"))
           .groupBy(col("p")).agg(sum(col("n")).as("u"))
           .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-        usageMax = math.max(usageMax, usage.size.toLong)
         vocab = chars.map { case (c, _) =>
             (c, math.max(usage.getOrElse(c, 0L), 1L)) } ++
           usage.toSeq.filter(_._1.length >= 2).sortBy(_._1)
       }
-      TrainStats(vocab, skTypes, skToks, seedWall,
-        (System.nanoTime() - t1) / 1e9, usageMax)
+      TrainStats(vocab, skTypes, skToks)
     } finally { all.unpersist(); () }
   }
 

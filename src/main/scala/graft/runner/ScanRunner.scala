@@ -1,7 +1,7 @@
 package graft.runner
 
 import java.io.File
-import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
@@ -26,12 +26,13 @@ import org.apache.spark.sql.SparkSession
   *
   * Spark mapping: the pthread pool becomes a bounded driver-side executor
   * issuing concurrent Spark *jobs* (one per file); Spark's scheduler runs
-  * each job's tasks. Read bytes come from task `InputMetrics` via a
-  * SparkListener (the monitored-filesystem equivalent, main.cc:107-113,
-  * without wrapping Hadoop's FileSystem). Row counting executes the full
-  * `SELECT *` plan (`toRdd.count()` — column pruning deliberately NOT
-  * applied, matching the reference's full-row retrieval experiment,
-  * main.cc:166).
+  * each job's tasks. Read ops and bytes come from [[MonitoredFileSystem]],
+  * the reference's meter (main.cc:107-113, 327-335); task `InputMetrics`
+  * can undercount a local parquet scan to little more than its footers,
+  * so the SparkListener supplies read records alone. Row counting
+  * executes the full `SELECT *` plan (`toRdd.count()` — column pruning
+  * deliberately NOT applied, matching the reference's full-row retrieval
+  * experiment, main.cc:166).
   *
   * At 100 TB the per-file-job shape is still right when per-file result
   * isolation matters (the reference's design); when it doesn't, a single
@@ -40,18 +41,15 @@ import org.apache.spark.sql.SparkSession
   */
 object ScanRunner {
 
-  /** Aggregates task input metrics across all jobs (the mutex-merged
-    * ReadStats of main.cc:273-281, listener-style). */
+  /** Aggregates task input metrics across all jobs, listener-style. */
   final class InputMetricsListener extends SparkListener {
     val bytesRead = new LongAdder
     val recordsRead = new LongAdder
-    val tasks = new LongAdder
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
       val m = t.taskMetrics
       if (m != null) {
         bytesRead.add(m.inputMetrics.bytesRead)
         recordsRead.add(m.inputMetrics.recordsRead)
-        tasks.increment()
       }
     }
   }
@@ -62,8 +60,10 @@ object ScanRunner {
 
   /** Run the harness over `dataDirs`. Mirrors `process_dir`
     * (main.cc:297-336). Every file is read through [[MonitoredFileSystem]]
-    * so the report carries the reference's op-count metric (one op per
-    * `Read()` call, main.cc:107-113) alongside task-metric bytes. */
+    * so the report carries the reference's metrics: one op per `Read()`
+    * call and the bytes those calls returned (main.cc:107-113). Throws if
+    * the scans do not finish within an hour, rather than report a partial
+    * row count. */
   def run(spark: SparkSession, dataDirs: Seq[String], filterCol: String,
       threshold: Double, jobs: Int, monDisks: Seq[String] = Nil,
       printRows: Int = 0): Report = {
@@ -78,7 +78,7 @@ object ScanRunner {
     val listener = new InputMetricsListener
     spark.sparkContext.addSparkListener(listener)
     val before = DiskStats.snapshot(monDisks)
-    val (ops0, _) = MonitoredFs.snapshot()
+    val (ops0, bytes0) = MonitoredFs.snapshot()
 
     val predicate = s"$filterCol > $threshold"
     val totalRows = new AtomicLong
@@ -113,19 +113,31 @@ object ScanRunner {
         }
       }
     }
-    pool.shutdown()
-    pool.awaitTermination(1, TimeUnit.HOURS)
+    try awaitScans(pool, TimeUnit.HOURS.toMillis(1), dataDirs)
+    finally spark.sparkContext.removeSparkListener(listener)
     val secs = (System.nanoTime() - t0) / 1e9
 
     val after = DiskStats.snapshot(monDisks)
     val deltas = before.keySet.intersect(after.keySet)
       .map(d => d -> (after(d) - before(d))).toMap
-    spark.sparkContext.removeSparkListener(listener)
-    val (ops1, _) = MonitoredFs.snapshot()
+    val (ops1, bytes1) = MonitoredFs.snapshot()
 
     Report(predicate, jobs, secs, totalRows.get(), ops1 - ops0,
-      listener.bytesRead.sum(), listener.recordsRead.sum(),
+      bytes1 - bytes0, listener.recordsRead.sum(),
       files.size, failed.get().toInt, deltas)
+  }
+
+  /** Shut `pool` down and wait up to `timeoutMs` for its scans. On
+    * timeout, interrupt them and throw: a partial row count must never
+    * be reported as a finished run. */
+  private[graft] def awaitScans(pool: ExecutorService, timeoutMs: Long,
+      dataDirs: Seq[String]): Unit = {
+    pool.shutdown()
+    if (!pool.awaitTermination(timeoutMs, TimeUnit.MILLISECONDS)) {
+      pool.shutdownNow()
+      throw new IllegalStateException(s"scan of ${dataDirs.mkString(", ")}" +
+        s" did not finish within $timeoutMs ms")
+    }
   }
 
   /** Arrow IPC stream sink (A7's stream-to-client semantics): run the

@@ -462,8 +462,8 @@ object EventStreams {
     * §28's measurement — ~420 B/doc TOTAL at ×100 on the fixture corpus
     * whose stored side averages ~52 folds/doc ⇒ ~416 B of array +
     * ~16 B fixed (key + array header — the same rows×16 + folds×8
-    * pricing ScaleProbe's stream_gates docarray_mb row uses). The
-    * array term now comes from the corpus itself. */
+    * pricing behind SCALE.md §28's docarray_mb row). The array term
+    * now comes from the corpus itself. */
   private[graft] val DocArrayBytesPerElem = 8L
   private[graft] val DocArrayRowOverheadBytes = 16L
 
@@ -495,18 +495,16 @@ object EventStreams {
     case m => m
   }
 
-  /** The posting table as the probe join's build side. Under the
-    * `partitioned` layout the checkpoint already carries the `h`
-    * hash-partitioning, so a sort-merge join would add nothing but a
+  /** The posting table as the probe join's build side. The
+    * checkpoint already carries the `h` hash-partitioning (see
+    * [[clusterIndex]]), so a sort-merge join would add nothing but a
     * per-trigger SORT of the whole index (SMJ sorts both sides every
     * micro-batch — the index side's sort is corpus-sized re-work);
     * the shuffled-hash hint builds the co-located posting partition
     * into a hash map instead, the [[joinDocArrays]] bucketed-mode
-    * discipline applied to the posting side. `plain` keeps the r15
-    * join untouched for A/B probes. */
-  private def probeSide(s: SparkSession, statSide: DataFrame): DataFrame =
-    if (postingsLayout(s) == "partitioned") statSide.hint("shuffle_hash")
-    else statSide
+    * discipline applied to the posting side. */
+  private def probeSide(statSide: DataFrame): DataFrame =
+    statSide.hint("shuffle_hash")
 
   /** Join per-candidate rows to the stored doc-array table in the
     * RESOLVED mode. `idxArr` comes out of [[clusterIndex]] already
@@ -542,34 +540,28 @@ object EventStreams {
     s"(${fold40Sql(e, FoldA)} * 8388608 + ${fold40Sql(e, FoldB)} % 8388608)"
   }
 
-  /** Posting-table layout (`spark.graft.cluster.postings`) — r16: the
-    * probe join `arrivals ⋈ postings ON h` re-partitioned the WHOLE
-    * posting table on EVERY micro-batch trigger (the stored side is a
-    * plain localCheckpoint, so its RDD carries the idx_id partitioning
-    * of the label join, not the probe key), i.e. 4 triggers = 4 full
-    * index shuffles per invocation, per gate. `partitioned` (default)
-    * bakes the `h` hash-partitioning INTO the checkpoint — the
-    * [[docArrayMode]] `bucketed` trick applied to the posting table —
-    * so each trigger shuffles only its arrivals TO the index: shuffle
-    * ∝ batch, never ∝ index, which is also the only shape that
-    * survives 100 TB (a stored posting index is hash-bucketed on its
-    * probe key on disk; re-partitioning it per trigger is corpus-sized
-    * work per micro-batch). `plain` keeps the r15 shape for A/B
-    * probes. Rows are layout-independent (same join, same keys). */
-  private[graft] def postingsLayout(s: SparkSession): String =
-    s.conf.get("spark.graft.cluster.postings", "partitioned")
-
   /** Build (or memo-hit) the cluster gate's stored index pair — see
     * [[clusterPostingsMemo]]. Shared by q_stream_clusters and
     * q_stream_pipeline_v2 under ONE memo entry (same cut convention,
-    * same tables). */
+    * same tables).
+    *
+    * The posting table is checkpointed hash-partitioned on the probe
+    * key `h`. A plain localCheckpoint would carry the idx_id
+    * partitioning of the label join, not the probe key, so the probe
+    * join `arrivals ⋈ postings ON h` would re-partition the WHOLE
+    * posting table on EVERY micro-batch trigger: 4 triggers = 4 full
+    * index shuffles per invocation, per gate. Baking `h` into the
+    * checkpoint — the [[docArrayMode]] `bucketed` trick applied to the
+    * posting table — makes each trigger shuffle only its arrivals TO
+    * the index: shuffle ∝ batch, never ∝ index, which is also the only
+    * shape that survives 100 TB (a stored posting index is
+    * hash-bucketed on its probe key on disk). */
   private def clusterIndex(s: SparkSession, d: String, cut: Long,
       g: DataFrame, oldLabels: DataFrame, mode: String)
       : (DataFrame, DataFrame) = {
-    val layout = postingsLayout(s)
     graft.MemoStats.memoized("cluster_postings", clusterPostingsMemo,
         (org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s), d, cut,
-          mode + "/" + layout)) {
+          mode)) {
       val stored = g.where(col("doc_id") < cut)
         .select(col("doc_id").as("idx_id"),
           transform(col("sh"), x => fold63(x)).as("idx_h"))
@@ -581,12 +573,7 @@ object EventStreams {
       val joined = ex.join(rare, Seq("h"))
         .join(oldLabels.select(col("doc_id").as("idx_id"),
           col("lbl").as("idx_lbl")), Seq("idx_id"))
-      // `partitioned`: hash-partition on the probe key h inside the
-      // checkpoint (LogicalRDD keeps outputPartitioning) — see
-      // [[postingsLayout]]; triggers then shuffle arrivals only
-      val postings = (if (layout == "partitioned")
-        partitionedCheckpoint(s, joined, col("h"))
-      else joined.localCheckpoint())
+      val postings = partitionedCheckpoint(s, joined, col("h"))
       // bucketed mode: bake the idx_id hash-partitioning INTO the
       // checkpoint (LogicalRDD keeps outputPartitioning), so triggers
       // shuffle candidates to the index, never the index to candidates
@@ -629,11 +616,11 @@ object EventStreams {
     import org.apache.spark.sql.expressions.Window
     // spark.graft.cluster.zoneSlices (default 4): drop-zone file count
     // = trigger count (maxFilesPerTrigger=1). The gates are batching-
-    // invariant (the oracle proves it at any slicing); ScaleProbe
-    // raises this to put each trigger's keys in a SUBSET of the publish
-    // buckets — the pruning-WIN regime of the keyed-upsert sink (r14
-    // verdict missing #1), which the 4-slice fixture can't reach
-    // because every trigger touches every bucket.
+    // invariant (the oracle proves it at any slicing); raising it puts
+    // each trigger's keys in a SUBSET of the publish buckets — the
+    // pruning-WIN regime of the keyed-upsert sink (r14 verdict missing
+    // #1, SCALE.md §29), which the 4-slice fixture can't reach because
+    // every trigger touches every bucket.
     val slices = s.conf.get("spark.graft.cluster.zoneSlices", "4").toInt
     stagedZone(s, "sclus3", d, slices) {
       val exh = g.select(col("doc_id"),
@@ -712,7 +699,7 @@ object EventStreams {
         transform(expr(Dedup.ShingleExpr), x => fold63(x)).as("sh_h"),
         explode_outer(col("pfx")).as("h"))
     val scored = joinDocArrays(
-        arrivals.join(probeSide(s, statSide), Seq("h"), "left"),
+        arrivals.join(probeSide(statSide), Seq("h"), "left"),
         idxArr, daMode)
       .withColumn("inter",
         size(array_intersect(col("sh_h"), col("idx_h"))).cast("double"))
@@ -750,7 +737,7 @@ object EventStreams {
     *    BEFORE, the trigger's net payload. Their ratio is the sink's
     *    write amplification, the number that sizes the bucket count
     *    against the trigger cadence at 100 TB (r14 verdict missing #1;
-    *    ScaleProbe's stream_gates legs sum both per run). */
+    *    SCALE.md §29 sums both per run). */
   private[graft] val publishBatchRows = new scala.collection.concurrent
     .TrieMap[String, Vector[Long]]
   private[graft] val publishScanStats = new scala.collection.concurrent
@@ -815,15 +802,12 @@ object EventStreams {
     // batch frame × the keep-read's scan partitions yielded ~dozens of
     // near-empty parquet files PER TRIGGER, each paying open/footer/
     // commit-rename on write and listing/open on the NEXT trigger's
-    // keep-read (and on the published-table read). `on` (default)
-    // hash-clusters rows by the partition key before each write, so a
-    // trigger writes one file per touched bucket — a shuffle of the
-    // (tiny) emitted batch buys O(buckets) instead of
-    // O(tasks × buckets) files. `off` keeps the r15 shape for A/B.
-    val clusteredWrite =
-      s.conf.get("spark.graft.publish.clusteredWrite", "on") == "on"
-    def clustered(df: DataFrame): DataFrame =
-      if (clusteredWrite) df.repartition(col("pb")) else df
+    // keep-read (and on the published-table read). Hash-clustering rows
+    // by the partition key before each write makes a trigger write one
+    // file per touched bucket — a shuffle of the (tiny) emitted batch
+    // buys O(buckets) instead of O(tasks × buckets) files; both writes
+    // below repartition on pb.
+
     // publish schema, derived WITHOUT running anything: `finish` is
     // pure column arithmetic, so applying it to an empty static frame
     // of the gate's schema yields the published shape
@@ -880,7 +864,8 @@ object EventStreams {
               // keeps an empty FIRST batch from creating a schemaless
               // parquet dir the next trigger's read would choke on
             } else if (!fs.exists(outPath)) {
-              clustered(bp).write.partitionBy("pb").parquet(out)
+              bp.repartition(col("pb"))
+                .write.partitionBy("pb").parquet(out)
             } else {
               // schema stated, not inferred: the published schema is
               // known (pubSchema + the pb partition key), so the
@@ -909,8 +894,9 @@ object EventStreams {
                 .join(bp.select(col(keyCol)), Seq(keyCol), "left_anti")
                 .select(bp.columns.map(col).toIndexedSeq: _*)
                 .localCheckpoint()
-              clustered(keep.union(bp.select(keep.columns.map(col)
-                  .toIndexedSeq: _*)))
+              keep.union(bp.select(keep.columns.map(col)
+                  .toIndexedSeq: _*))
+                .repartition(col("pb"))
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("pb").parquet(out)
@@ -1467,8 +1453,9 @@ object EventStreams {
       // Changelog checkpointing: commit persists only the batch's delta
       // (the changelog) instead of a full RocksDB snapshot per batch —
       // snapshots still happen, but in the background and amortized
-      // over many batches. Measured here (TwsProbe, 8 state partitions,
-      // 4 batches): steady-state commit drops ~950 ms → ~370 ms per
+      // over many batches. Measured once at 8 state partitions, 4
+      // batches (SCALE.md §16 has the commit-vs-volume curve):
+      // steady-state commit drops ~950 ms → ~370 ms per
       // batch (changelog fsync only); batch 0 still pays the one-time
       // base-snapshot upload (~2.2 s: file sync + zip), which dominates
       // a 4-batch toy run — Bench records commit_last_ms alongside the
@@ -2491,7 +2478,7 @@ object EventStreams {
       val scored = joinDocArrays(probes
         .join(broadcast(evalG), Seq("gh1", "gh2"), "left")
         .join(dupG, Seq("gh1", "gh2"), "left")
-        .join(probeSide(s, statSide), Seq("h"), "left"), idxArr, daMode)
+        .join(probeSide(statSide), Seq("h"), "left"), idxArr, daMode)
         .withColumn("inter",
           size(array_intersect(col("sh_h"), col("idx_h"))).cast("double"))
         .withColumn("jac", col("inter") /

@@ -846,6 +846,38 @@ class PlanSpec extends AnyFunSuite {
       slimScan.readSchema().treeString)
   }
 
+  // ---- conf knob census -------------------------------------------------
+  //
+  // Every `spark.graft.*` session conf key the library reads, by name. A
+  // knob that is added, or left behind when its last reader goes, fails
+  // this test until it is named here — the named-list discipline of the
+  // plan census below, applied to configuration.
+  private val graftKnobs = Set(
+    "spark.graft.ann.autoRetrain",
+    "spark.graft.bpe.autoRetrain",
+    "spark.graft.bpe.retrainOovPm",
+    "spark.graft.cluster.docarray",
+    "spark.graft.cluster.docarrayBudgetBytes",
+    "spark.graft.cluster.zoneSlices",
+    "spark.graft.dedup.dfCapGuard",
+    "spark.graft.publish.buckets",
+    "spark.graft.publish.receipts",
+    "spark.graft.topk.fallback",
+    "spark.graft.topk.partitionBudgetBytes")
+
+  test("knob census: src/main reads exactly the named spark.graft.* keys") {
+    import scala.jdk.CollectionConverters._
+    val key = "\"(spark\\.graft\\.\\w+(?:\\.\\w+)*)".r
+    val found = scala.util.Using.resource(
+        java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))) {
+      _.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+    }.flatMap { f =>
+      key.findAllMatchIn(java.nio.file.Files.readString(f)).map(_.group(1))
+    }.toSet
+    assert(found == graftKnobs, s"unnamed knobs: ${found -- graftKnobs}; " +
+      s"knobs no longer read: ${graftKnobs -- found}")
+  }
+
   // ---- suite-wide plan census ------------------------------------------
   //
   // The per-query assertions above pin ~40 load-bearing plans; this

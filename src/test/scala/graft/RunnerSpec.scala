@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.runner.{DiskStats, ScanRunner}
+import graft.runner.{DiskStats, MonitoredFs, ScanRunner}
 
 class RunnerSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -26,9 +26,47 @@ class RunnerSpec extends AnyFunSuite {
     assert(r.failedFiles == 9)         // only lineitem has the column
     assert(r.totalRows > 0)
     assert(r.readOps > 0, "monitored FS must count read calls")
-    assert(r.readBytes > 0, "listener must observe input bytes")
     assert(r.seconds > 0)
     assert(r.predicate == "l_extendedprice > 30000.0")
+
+    // known answer for the byte meter: θ below the column minimum keeps
+    // every row, so the scan reads the whole of its one file
+    val dir = java.nio.file.Files.createTempDirectory("graft_scan_one")
+    val file = java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$sf/lineitem.parquet"),
+      dir.resolve("lineitem.parquet"))
+    try {
+      import org.apache.spark.sql.functions.{col, min}
+      val li = spark.read.parquet(s"$sf/lineitem.parquet")
+      val lo = li.agg(min(col("l_extendedprice").cast("double"))).head
+        .getDouble(0)
+      val (_, b0) = MonitoredFs.snapshot()
+      val full = ScanRunner.run(spark, Seq(dir.toString), "l_extendedprice",
+        threshold = lo - 1.0, jobs = 2)
+      val (_, b1) = MonitoredFs.snapshot()
+      assert(full.failedFiles == 0 && full.totalRows == li.count())
+      assert(full.readBytes == b1 - b0,
+        "readBytes must be the monitored filesystem's byte delta")
+      assert(full.readBytes >= java.nio.file.Files.size(file),
+        s"a full scan read ${full.readBytes} B of a " +
+          s"${java.nio.file.Files.size(file)} B file")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
+  test("a fan-out that outlives its timeout throws instead of reporting") {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    pool.execute { () =>
+      try release.await()
+      catch { case _: InterruptedException => () }
+    }
+    val e = intercept[IllegalStateException] {
+      ScanRunner.awaitScans(pool, 100L, Seq("/data/a", "/data/b"))
+    }
+    assert(e.getMessage.contains("/data/a, /data/b"), e.getMessage)
+    assert(pool.isShutdown)
+    assert(pool.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS),
+      "the stuck scan must be interrupted")
   }
 
   test("arrow sink round-trips the filter scan") {
