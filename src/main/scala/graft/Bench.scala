@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.QueryDefs.Q
+
 /** Per-round benchmark main (driver contract): runs every library query
   * on SPARK_GRAFT_SF_DIR and prints ONE JSON metrics line.
   *
@@ -143,67 +145,16 @@ object Bench {
     val observed = new ObservedMetrics
     spark.listenerManager.register(observed)
 
-    // A rep that throws is timed as -1 and fails its query: the query
-    // stays in every map, its message goes to stderr, and the run exits
-    // non-zero once target/bench.json is written — a query that starts
-    // failing must never pass for a faster suite.
-    def once(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      // toRdd.count(), not Dataset.count(): wrapping the query in a count
-      // aggregate lets EliminateSorts drop the final ORDER BY, which would
-      // under-measure relative to what Verify actually executes.
-      try {
-        val df = fn(spark, sfDir)
-        df.queryExecution.toRdd.count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        observed.harvestFrom(df)
-        dt
-      }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: $e")
-        -1.0
-      }
-    }
-
-    // min-of-3: this host shows intermittent multi-second stalls
-    // unrelated to plan cost (identical queries measured 1.7s and 47s in
-    // different minutes); the min is the statistic that reflects the
-    // plan. ALL three rep times are also emitted ("reps") so an in-suite
-    // stall that eats every rep (q_projection_expr, round 6: min 3.86 s
-    // vs 0.78 s isolated) is self-diagnosing post-hoc.
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .map { case (name, fn) =>
-      // Per-rep cleanup OUTSIDE the timed region, so every rep starts
-      // from rep 1's environment: (a) cached intermediates (shingles,
-      // token explodes) a query reuses across its own branches; (b) the
-      // memory-sink temp view each streaming rep leaves behind
-      // ("tumbling_<nanos>", …) whose rows pin driver memory and grow
-      // the catalog monotonically — with the terminated-query registry,
-      // the prime suspects for r7's monotone per-rep growth on
-      // q_stream_tumbling (reps 1.32/2.25/3.96 s); (c) that registry
-      // itself. Fixture views some SQL queries register (registerAll)
-      // are re-registered by any query that needs them, so dropping all
-      // temp views is safe.
-      def cleanup(): Unit = {
-        spark.catalog.clearCache()
-        spark.catalog.listTables().collect()
-          .filter(_.isTemporary)
-          .foreach(t => spark.catalog.dropTempView(t.name))
-        spark.streams.resetTerminated()
-      }
-      val runs = Seq.fill(3) { val t = once(name, fn); cleanup(); t }
-      val best = if (runs.exists(_ < 0)) -1.0 else runs.min
-      (name, best, runs)
-    }
+    val (results, failed) = timeQueries(spark, sfDir,
+      SparkEntry.queries.toSeq.sortBy(_._1)
+        .filter { case (name, _) => only.isEmpty || only(name) },
+      observed)
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val repsJson = results.map { case (k, _, runs) =>
       "\"" + k + "\":" + runs.map(r => f"$r%.3f").mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    val failed = results.collect { case (k, v, _) if v < 0 => k }
     def names(ks: Seq[String]): String =
       ks.map("\"" + _ + "\"").mkString("[", ",", "]")
     // map the memory-sink name prefixes back to library query names
@@ -249,5 +200,66 @@ object Bench {
     println(s"""{"metric":"total","value":$totalStr,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"n_failed":${failed.size},"failed":${names(failed.take(10))},"queries":$top10,"full":"target/bench.json"}""")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** Time each of `queries` on `sfDir`, min-of-3, in order. Returns each
+    * query's (name, best seconds, the three rep times) and the names of
+    * the queries that failed; a failed query's best is -1. */
+  private[graft] def timeQueries(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, Q)],
+      observed: ObservedMetrics)
+      : (Seq[(String, Double, Seq[Double])], Seq[String]) = {
+    // A rep that throws is timed as -1 and fails its query: the query
+    // stays in every map, its message goes to stderr, and the run exits
+    // non-zero once target/bench.json is written — a query that starts
+    // failing must never pass for a faster suite.
+    def once(name: String, fn: Q): Double = {
+      val t0 = System.nanoTime()
+      // toRdd.count(), not Dataset.count(): wrapping the query in a count
+      // aggregate lets EliminateSorts drop the final ORDER BY, which would
+      // under-measure relative to what Verify actually executes.
+      try {
+        val df = fn(spark, sfDir)
+        df.queryExecution.toRdd.count()
+        val dt = (System.nanoTime() - t0) / 1e9
+        observed.harvestFrom(df)
+        dt
+      }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        -1.0
+      }
+    }
+
+    // min-of-3: this host shows intermittent multi-second stalls
+    // unrelated to plan cost (identical queries measured 1.7s and 47s in
+    // different minutes); the min is the statistic that reflects the
+    // plan. ALL three rep times are also emitted ("reps") so an in-suite
+    // stall that eats every rep (q_projection_expr, round 6: min 3.86 s
+    // vs 0.78 s isolated) is self-diagnosing post-hoc.
+    val results = queries.map { case (name, fn) =>
+      // Per-rep cleanup OUTSIDE the timed region, so every rep starts
+      // from rep 1's environment: (a) cached intermediates (shingles,
+      // token explodes) a query reuses across its own branches; (b) the
+      // memory-sink temp view each streaming rep leaves behind
+      // ("tumbling_<nanos>", …) whose rows pin driver memory and grow
+      // the catalog monotonically — with the terminated-query registry,
+      // the prime suspects for r7's monotone per-rep growth on
+      // q_stream_tumbling (reps 1.32/2.25/3.96 s); (c) that registry
+      // itself. Fixture views some SQL queries register (registerAll)
+      // are re-registered by any query that needs them, so dropping all
+      // temp views is safe.
+      def cleanup(): Unit = {
+        spark.catalog.clearCache()
+        spark.catalog.listTables().collect()
+          .filter(_.isTemporary)
+          .foreach(t => spark.catalog.dropTempView(t.name))
+        spark.streams.resetTerminated()
+      }
+      val runs = Seq.fill(3) { val t = once(name, fn); cleanup(); t }
+      val best = if (runs.exists(_ < 0)) -1.0 else runs.min
+      (name, best, runs)
+    }
+    (results, results.collect { case (k, v, _) if v < 0 => k })
   }
 }

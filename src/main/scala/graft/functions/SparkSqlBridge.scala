@@ -2,10 +2,18 @@ package org.apache.spark.sql.graftbridge
 
 import java.io.OutputStream
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.arrow.ArrowBatchStreamWriter
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into Spark's `private[sql]` Column↔Expression converters
   * (org.apache.spark.sql.classic.ExpressionUtils, Spark 4.x) and the
@@ -32,6 +40,33 @@ object Bridge {
     * and never evicts a stopped session's alias (ADVICE r9). */
   def sessionUUID(s: org.apache.spark.sql.SparkSession): String =
     s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
+
+  /** A new session on `s`'s SparkContext with a copy of its SQL conf,
+    * temp views and functions (`cloneSession` is `private[sql]`): conf
+    * set on the clone never reaches `s`. */
+  def cloneSession(s: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession =
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** The schema `spark.read.parquet(path)` infers for one file, read
+    * from its footer on the driver. Inference reads the same footer
+    * inside a Spark job (`SchemaMergeUtils.mergeSchemasInParallel`) and
+    * converts it with `readSchemaFromFooter` too. Its converter takes
+    * case sensitivity, field-id reads and the variant-annotation flag
+    * at their defaults where this one takes them from the session, so
+    * the two agree unless the session sets one of those. Throws if
+    * `path` is not a readable parquet file. */
+  def parquetSchema(spark: org.apache.spark.sql.SparkSession,
+      path: String): StructType = {
+    val state =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    val p = new Path(path)
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(p, state.newHadoopConf()),
+      ParquetMetadataConverter.NO_FILTER)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(p, footer),
+      new ParquetToSparkSchemaConverter(state.conf))
+  }
 
   /** Block until the shared LiveListenerBus has dispatched every queued
     * event (QueryExecutionListener and StreamingQueryListener both ride

@@ -5,7 +5,9 @@ import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Layer-A harness parity (SURVEY.md §2a): the reference program's spine
   * rebuilt Spark-first.
@@ -25,14 +27,23 @@ import org.apache.spark.sql.SparkSession
   *    main.cc:338-363) — A15.
   *
   * Spark mapping: the pthread pool becomes a bounded driver-side executor
-  * issuing concurrent Spark *jobs* (one per file); Spark's scheduler runs
-  * each job's tasks. Read ops and bytes come from [[MonitoredFileSystem]],
-  * the reference's meter (main.cc:107-113, 327-335); task `InputMetrics`
-  * can undercount a local parquet scan to little more than its footers,
-  * so the SparkListener supplies read records alone. Row counting
-  * executes the full `SELECT *` plan (`toRdd.count()` — column pruning
-  * deliberately NOT applied, matching the reference's full-row retrieval
-  * experiment, main.cc:166).
+  * of `jobs` threads, each issuing one Spark job per file; every job is
+  * one task over one split, so a file is scanned by one thread, as the
+  * reference pins each query to `maximum_threads = 1` (main.cc:177), and
+  * `jobs` is the run's whole parallelism. The scan is the reference's
+  * `SELECT * FROM '<file>' WHERE <col> > θ` (main.cc:164-169) with the
+  * file's schema read from its footer on the driver
+  * ([[org.apache.spark.sql.graftbridge.Bridge.parquetSchema]]), so no
+  * schema-inference job runs. One split per file comes from a clone of
+  * the caller's session whose split size exceeds any file's length; the
+  * caller's session conf is not touched. Read ops and bytes, footers
+  * included, come from [[MonitoredFileSystem]], the reference's meter
+  * (main.cc:107-113, 327-335); task `InputMetrics` can undercount a
+  * local parquet scan to little more than its footers, so the
+  * SparkListener supplies read records alone. Row counting executes the
+  * full `SELECT *` plan (`toRdd.count()` — column pruning deliberately
+  * NOT applied, matching the reference's full-row retrieval experiment,
+  * main.cc:166).
   *
   * At 100 TB the per-file-job shape is still right when per-file result
   * isolation matters (the reference's design); when it doesn't, a single
@@ -53,6 +64,14 @@ object ScanRunner {
       }
     }
   }
+
+  /** `spark.sql.files.maxPartitionBytes` and `openCostInBytes` in the
+    * fan-out's session. `FilePartition.maxSplitBytes` is
+    * min(maxPartitionBytes, max(openCostInBytes, bytes per core)), so at
+    * this value it exceeds any file's length and each file is one split.
+    * Half of `Long.MaxValue`, so Spark's sum of a file's length and its
+    * open cost cannot overflow. */
+  private val OneSplitBytes = (Long.MaxValue / 2).toString
 
   final case class Report(predicate: String, threads: Int, seconds: Double,
       totalRows: Long, readOps: Long, readBytes: Long, readRecords: Long,
@@ -75,6 +94,9 @@ object ScanRunner {
 
     spark.sparkContext.hadoopConfiguration
       .set(MonitoredFs.ImplKey, classOf[MonitoredFileSystem].getName)
+    val scan = Bridge.cloneSession(spark)
+    scan.conf.set("spark.sql.files.maxPartitionBytes", OneSplitBytes)
+    scan.conf.set("spark.sql.files.openCostInBytes", OneSplitBytes)
     val listener = new InputMetricsListener
     spark.sparkContext.addSparkListener(listener)
     val before = DiskStats.snapshot(monDisks)
@@ -93,9 +115,8 @@ object ScanRunner {
           // SELECT * FROM '<f>' WHERE <col> > θ — executed via toRdd so
           // every column is materialized (no count-driven pruning),
           // matching the reference's full-row fetch loop.
-          val df = spark.read.parquet(s"${MonitoredFs.Scheme}:$f")
-            .where(org.apache.spark.sql.functions.col(filterCol)
-              .cast("double") > threshold)
+          val df = readFile(scan, s"${MonitoredFs.Scheme}:$f")
+            .where(col(filterCol).cast("double") > threshold)
           // A8 pretty-print sink (the reference's print_binary=0 path,
           // main.cc:193-195) — debug mode, costs a second scan
           if (printRows > 0) df.show(printRows, truncate = false)
@@ -125,6 +146,16 @@ object ScanRunner {
     Report(predicate, jobs, secs, totalRows.get(), ops1 - ops0,
       bytes1 - bytes0, listener.recordsRead.sum(),
       files.size, failed.get().toInt, deltas)
+  }
+
+  /** One file as the fan-out reads it: schema from the footer, read on
+    * the driver, then a scan with that schema stated. Spark's file
+    * listing drops hidden names (`_x`, `.x`); schema inference failed on
+    * such a file, and so must this, rather than scan nothing. */
+  private[graft] def readFile(scan: SparkSession, path: String): DataFrame = {
+    val df = scan.read.schema(Bridge.parquetSchema(scan, path)).parquet(path)
+    require(df.inputFiles.nonEmpty, s"Spark's file listing skips $path")
+    df
   }
 
   /** Shut `pool` down and wait up to `timeoutMs` for its scans. On

@@ -196,6 +196,22 @@ object EventStreams {
       .withColumn("ts", col("ts").cast("timestamp"))
   }
 
+  /** Longest a library stream may run before [[awaitStream]] gives up on
+    * it: far above the slowest one, which takes about 7 s at sf0.1
+    * (q_stream_clusters). */
+  private val StreamTimeoutMs = 10L * 60 * 1000
+
+  /** Wait up to `timeoutMs` for `q` to finish. On timeout, stop it and
+    * throw, naming the query: one stuck stream must fail its query, not
+    * hang the whole Bench or Verify run. */
+  private[graft] def awaitStream(q: org.apache.spark.sql.streaming
+      .StreamingQuery, timeoutMs: Long = StreamTimeoutMs): Unit =
+    if (!q.awaitTermination(timeoutMs)) {
+      q.stop()
+      throw new IllegalStateException(s"stream ${Option(q.name)
+        .getOrElse(q.id.toString)} did not finish within $timeoutMs ms")
+    }
+
   /** Run `df` (a streaming DataFrame) to completion into a memory sink,
     * return the sink table.
     *
@@ -223,7 +239,7 @@ object EventStreams {
         .queryName(name)
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
+      awaitStream(q)
       // streaming plan census feed: the LAST micro-batch's physical
       // plan, keyed by the STABLE sink prefix (the query identity
       // PlanSpec and Bench both key on) — per-trigger plans are where
@@ -856,8 +872,10 @@ object EventStreams {
             // set — a bounded driver scalar (≤ bucket-count ids) the
             // upsert branch needs anyway — doubles as the emptiness
             // probe, replacing the separate isEmpty job each trigger
-            // paid before
-            val touched = bp.select(col("pb")).distinct()
+            // paid before. Lazy: with receipts on, the count answers
+            // emptiness, so the first write and empty batches never
+            // collect it
+            lazy val touched = bp.select(col("pb")).distinct()
               .collect().map(_.getLong(0)).toSeq
             if (n.fold(touched.isEmpty)(_ == 0L)) {
               // nothing to upsert — and skipping the write is what
@@ -910,7 +928,7 @@ object EventStreams {
         }
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
+      awaitStream(q)
       org.apache.spark.sql.graftbridge.Bridge.lastMicroBatchPlan(q)
         .foreach { p =>
           graft.MemoStats.registerForEviction(lastPlans)
@@ -1504,7 +1522,7 @@ object EventStreams {
           }
           .trigger(Trigger.AvailableNow())
           .start()
-        q.awaitTermination()
+        awaitStream(q)
         org.apache.spark.sql.graftbridge.Bridge.lastMicroBatchPlan(q)
           .foreach { p =>
             graft.MemoStats.registerForEviction(lastPlans)

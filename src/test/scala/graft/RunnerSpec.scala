@@ -1,11 +1,42 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.runner.{DiskStats, MonitoredFs, ScanRunner}
 
-class RunnerSpec extends AnyFunSuite {
+class RunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
   import SparkTestSession._
+
+  private val bigDir: Path = Files.createTempDirectory("graft_scan_big")
+
+  /** One Spark-written parquet file in `bigDir`, larger than the 4 MB
+    * default `openCostInBytes`, so Spark's split sizing cuts it in two;
+    * a copy of the fixture lineitem sits beside it. */
+  private lazy val bigFile: String = {
+    import org.apache.spark.sql.functions.{col, rand, randn}
+    val out = bigDir.resolve("spark_out").toString
+    spark.range(0L, 300000L, 1L, 1)
+      .select(col("id"), (rand(7) * 100000).as("l_extendedprice"),
+        randn(8).as("pad"))
+      .coalesce(1).write.parquet(out)
+    val part = new java.io.File(out).listFiles
+      .filter(_.getName.endsWith(".parquet")).head
+    val big = Files.move(part.toPath, bigDir.resolve("big.parquet"))
+    FileUtils.deleteDirectory(new java.io.File(out))
+    Files.copy(Paths.get(s"$sf/lineitem.parquet"),
+      bigDir.resolve("lineitem.parquet"))
+    big.toString
+  }
+
+  override def afterAll(): Unit =
+    try FileUtils.deleteQuietly(bigDir.toFile) finally super.afterAll()
 
   test("driver contract: oracles ⊆ queries; rows-only set is exactly the documented two") {
     val q = SparkEntry.queries.keySet
@@ -51,6 +82,65 @@ class RunnerSpec extends AnyFunSuite {
         s"a full scan read ${full.readBytes} B of a " +
           s"${java.nio.file.Files.size(file)} B file")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
+  test("the fan-out runs one job of one task per file") {
+    assert(Files.size(Paths.get(bigFile)) > 4L * 1024 * 1024)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        tasks.incrementAndGet()
+    }
+    val conf0 = Seq("spark.sql.files.maxPartitionBytes",
+      "spark.sql.files.openCostInBytes").map(spark.conf.getOption)
+    Bridge.waitListenerBus(spark, 10000)
+    spark.sparkContext.addSparkListener(counter)
+    val r = try {
+      val r = ScanRunner.run(spark, Seq(bigDir.toString), "l_extendedprice",
+        threshold = 50000.0, jobs = 2)
+      Bridge.waitListenerBus(spark, 10000)
+      r
+    } finally spark.sparkContext.removeSparkListener(counter)
+    assert(r.files == 2 && r.failedFiles == 0)
+    assert(jobs.get == r.files, "one job per file: no schema-inference job")
+    assert(tasks.get == r.files, "one task per file: one split per file")
+    assert(Seq("spark.sql.files.maxPartitionBytes",
+      "spark.sql.files.openCostInBytes").map(spark.conf.getOption) == conf0,
+      "the caller's session conf must not change")
+  }
+
+  test("the fan-out scans each file with the schema spark.read infers") {
+    val files = new java.io.File(sf).listFiles.filter(_.isFile)
+      .map(_.getPath).sorted.toSeq :+ bigFile
+    assert(files.size == 11)
+    files.foreach { f =>
+      assert(ScanRunner.readFile(spark, f).schema ==
+        spark.read.parquet(f).schema, f)
+    }
+    // the footer of a Spark-written file keeps non-null columns
+    // non-null; the read must still come out nullable, as inference's does
+    assert(Bridge.parquetSchema(spark, bigFile).exists(!_.nullable))
+    assert(ScanRunner.readFile(spark, bigFile).schema.forall(_.nullable))
+  }
+
+  test("a non-parquet file and a hidden one each count as a failed file") {
+    val dir = Files.createTempDirectory("graft_scan_junk")
+    try {
+      Seq("lineitem.parquet", "_hidden.parquet").foreach { name =>
+        Files.copy(Paths.get(s"$sf/lineitem.parquet"), dir.resolve(name))
+      }
+      Files.write(dir.resolve("notes.txt"), "not parquet\n".getBytes("UTF-8"))
+      val r = ScanRunner.run(spark, Seq(dir.toString), "l_quantity", 25.0,
+        jobs = 2)
+      // Spark's file listing drops `_hidden.parquet`: it must fail, not
+      // pass as a file with no rows
+      assert(r.files == 3 && r.failedFiles == 2)
+      assert(r.totalRows == ScanRunner.runMerged(spark,
+        Seq(s"$sf/lineitem.parquet"), "l_quantity", 25.0))
+    } finally FileUtils.deleteQuietly(dir.toFile)
   }
 
   test("a fan-out that outlives its timeout throws instead of reporting") {

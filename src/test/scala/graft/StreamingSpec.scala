@@ -1045,4 +1045,15 @@ class StreamingSpec extends AnyFunSuite {
       "zone must stream at the true count after the scrub")
     fs.delete(new Path(zone), true)
   }
+
+  test("a stream that outlives its wait is stopped and named") {
+    // rate source, default trigger: the stream never ends by itself
+    val q = spark.readStream.format("rate").load()
+      .writeStream.format("noop").queryName("never_ends").start()
+    val e = intercept[IllegalStateException] {
+      graft.streaming.EventStreams.awaitStream(q, 100L)
+    }
+    assert(e.getMessage.contains("never_ends"), e.getMessage)
+    assert(!q.isActive, "a timed-out stream must be stopped")
+  }
 }
